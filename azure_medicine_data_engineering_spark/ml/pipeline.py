@@ -13,8 +13,10 @@ reproducible results on any cluster layout.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -24,6 +26,20 @@ class TrainedModel:
     model: object  # PipelineModel
     metrics: dict[str, float]
     feature_importances: dict[str, float]
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    """Persist ``df`` for the block and release it after, unless the caller
+    already cached it (then its cache is left as it is)."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def hash_split(df: DataFrame, id_col: str, train_frac: float = 0.7) -> tuple[DataFrame, DataFrame]:
@@ -55,7 +71,12 @@ def train_decision_tree(
     """Imputer(mean) → MinMaxScaler → DecisionTreeClassifier pipeline.
     Hyperparameter defaults mirror the reference's best hyperdrive run
     (max_depth 5, min_samples_split 7, min_impurity_decrease 5e-5,
-    README.md:718-724)."""
+    README.md:718-724).
+
+    Every fit stage (the Imputer's means, the scaler's bounds, each tree
+    level) re-scans ``train``, so an uncached ``train`` is persisted for
+    the fit and released afterwards; a frame the caller cached keeps its
+    cache."""
     from pyspark.ml import Pipeline
     from pyspark.ml.classification import DecisionTreeClassifier
     from pyspark.ml.feature import Imputer, MinMaxScaler, VectorAssembler
@@ -74,7 +95,8 @@ def train_decision_tree(
             seed=seed,
         ),
     ]
-    return Pipeline(stages=stages).fit(train)
+    with _persisted(train):
+        return Pipeline(stages=stages).fit(train)
 
 
 def evaluate(model, test: DataFrame, feature_cols: list[str], label_col: str) -> TrainedModel:
@@ -84,12 +106,14 @@ def evaluate(model, test: DataFrame, feature_cols: list[str], label_col: str) ->
     )
 
     pred = model.transform(test)
-    auc = BinaryClassificationEvaluator(
-        labelCol=label_col, metricName="areaUnderROC"
-    ).evaluate(pred)
-    acc = MulticlassClassificationEvaluator(
-        labelCol=label_col, metricName="accuracy"
-    ).evaluate(pred)
+    # both evaluators scan the predictions
+    with _persisted(pred):
+        auc = BinaryClassificationEvaluator(
+            labelCol=label_col, metricName="areaUnderROC"
+        ).evaluate(pred)
+        acc = MulticlassClassificationEvaluator(
+            labelCol=label_col, metricName="accuracy"
+        ).evaluate(pred)
     tree = model.stages[-1]
     importances = {
         c: float(tree.featureImportances[i]) for i, c in enumerate(feature_cols)

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
@@ -228,9 +229,16 @@ def _write_section(
 ) -> DataFrame:
     """Range-partition + sort one section and stream every partition to
     ``<level>gram-<pid 05d>.txt`` (attempt-unique tmp + atomic rename).
-    pid-ordered concatenation of the shard files IS the sorted section."""
+    pid-ordered concatenation of the shard files IS the sorted section.
+
+    The stat slots are integers by contract: a non-integral stat column
+    raises ``TypeError`` here on the driver, before any task runs."""
     keys = [f"w{i}" for i in range(1, level + 1)]
     stats = ARPA_LEVEL_STATS[level]
+    types = {f.name: f.dataType for f in level_df.schema.fields}
+    bad = {s: types[s].simpleString() for s in stats if not isinstance(types[s], IntegralType)}
+    if bad:
+        raise TypeError(f"ARPA {level}-gram stats must be integral, got {bad}")
     staged = level_df.repartitionByRange(shards, *keys).sortWithinPartitions(
         *keys
     )
@@ -258,16 +266,19 @@ def _write_section(
                 fh = open(tmp, "w", encoding="utf-8")
             # vectorized line assembly (optimization round 16, guide
             # §4.2): pandas str.cat instead of a per-row Python loop;
-            # astype(str) on int64 stats equals str(int) byte-for-byte
+            # astype(str) on int64 stats equals str(int) byte-for-byte.
+            # astype("int64") first: a NULL stat arrives as float64 NaN
+            # and must raise, not land as "nan" or "1.0".
             words = pdf[keys[0]].astype(str)
             if len(keys) > 1:
                 words = words.str.cat(
                     [pdf[k].astype(str) for k in keys[1:]], sep=" "
                 )
-            vals = pdf[stats[0]].astype(str)
+            vals = pdf[stats[0]].astype("int64").astype(str)
             if len(stats) > 1:
                 vals = vals.str.cat(
-                    [pdf[s].astype(str) for s in stats[1:]], sep=" "
+                    [pdf[s].astype("int64").astype(str) for s in stats[1:]],
+                    sep=" ",
                 )
             lines = words.str.cat(vals, sep="\t")
             if len(lines):

@@ -65,6 +65,11 @@ class CleaningSpec:
         for rule in self.casts:
             for c in rule.columns:
                 cast_of[c] = rule
+        unknown = set(cast_of) - set(cols) - set(name_of.values())
+        if unknown:
+            # a cast of a column the frame lacks is a spec error: let the
+            # analyzer reject it, naming the column and its near matches
+            df.select(*[F.col(f"`{c}`") for c in sorted(unknown)])
 
         projection: list[Column] = []
         for c in cols:

@@ -4,8 +4,11 @@ Parity: the reference stores a per-clinical-table mapping
 ``divisionName -> array<string>`` of column names
 (``studyGrScalaA.scala:178-184`` → Delta ``studyGroupDivisions``) and reads it
 back with ``getColNamesOfDivisions`` (``utils.scala:75-79``) by collecting to
-the driver and flattening WrappedArrays. Here the lookup stays distributed:
-filter → explode → distinct.
+the driver and flattening WrappedArrays. ``get_columns_of_divisions_df``
+keeps that lookup distributed (filter → explode → distinct) for callers
+that join or publish it. ``get_columns_of_divisions`` is the driver-side
+answer: the metadata frame has one row per division, so it collects the
+filtered lists in one job and dedupes them in Python, with no shuffle.
 """
 
 from __future__ import annotations
@@ -40,5 +43,7 @@ def get_columns_of_divisions_df(div: DataFrame, names: list[str]) -> DataFrame:
 
 
 def get_columns_of_divisions(div: DataFrame, names: list[str]) -> list[str]:
-    """Driver-side convenience (the metadata frame is tiny by construction)."""
-    return [r.columnName for r in get_columns_of_divisions_df(div, names).collect()]
+    """Driver-side lookup: each column covered by the named divisions once,
+    in first-seen order (the metadata frame is tiny by construction)."""
+    rows = div.where(F.col("divisionName").isin(names)).select("listOfColumnNames").collect()
+    return list(dict.fromkeys(c for r in rows for c in r.listOfColumnNames or ()))

@@ -2,8 +2,10 @@
 
 Parity: ``createTablesWithMeta`` — ``utils.scala:162-171``. The reference
 appends by reading the whole catalog, unioning one row, and overwriting the
-same table — a read-modify-overwrite race (SURVEY §7 bug list). Here the
-append is a real ``mode("append")`` write.
+same table — a read-modify-overwrite race (SURVEY §7 bug list). Here each
+registration is one parameterized SQL ``INSERT`` of one row, which writes
+one data file. Named parameters carry the table name and description, so
+any description (quotes, ``;``) is stored byte-exact.
 
 Catalog shape (FIXTURES.md T6)::
 
@@ -18,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from azure_medicine_data_engineering_spark.sources.writers import save_table
+from azure_medicine_data_engineering_spark.sources.writers import save_table, table_format
 
 META_SCHEMA = StructType(
     [
@@ -27,6 +29,8 @@ META_SCHEMA = StructType(
         StructField("time_stamp", TimestampType()),
     ]
 )
+
+_META_DDL = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in META_SCHEMA.fields)
 
 DEFAULT_CATALOG_TABLE = "analytics_catalog_metadata"
 
@@ -41,17 +45,21 @@ def create_table_with_meta(
     """Publish ``df`` as a managed table and register it in the catalog.
 
     Unlike the reference (``utils.scala:164-168``), the catalog row is
-    appended atomically instead of read-union-overwrite."""
+    appended atomically instead of read-union-overwrite: the catalog table
+    is created on first use (in ``save_table``'s format) and each call
+    inserts exactly one row."""
     spark = df.sparkSession
-    save_table(df, name, partition_by=partition_by)
-    meta_row = (
-        spark.createDataFrame([(name, description)], "tableName string, tableDescription string")
-        .withColumn("time_stamp", F.current_timestamp())
+    fmt = table_format(df)
+    save_table(df, name, fmt=fmt, partition_by=partition_by)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS IDENTIFIER(:t) ({_META_DDL}) USING {fmt}",
+        args={"t": catalog_table},
     )
-    if spark.catalog.tableExists(catalog_table):
-        meta_row.write.mode("append").format("parquet").saveAsTable(catalog_table)
-    else:
-        save_table(meta_row, catalog_table)
+    spark.sql(
+        "INSERT INTO IDENTIFIER(:t) (tableName, tableDescription, time_stamp) "
+        "SELECT :n, :d, current_timestamp()",
+        args={"t": catalog_table, "n": name, "d": description},
+    )
 
 
 def read_meta(spark: SparkSession, catalog_table: str = DEFAULT_CATALOG_TABLE) -> DataFrame:

@@ -31,6 +31,12 @@ def _delta_available(df: DataFrame) -> bool:
         return False
 
 
+def table_format(df: DataFrame) -> str:
+    """The managed-table format for ``df``'s session: Delta when the runtime
+    has it, else parquet."""
+    return "delta" if _delta_available(df) else "parquet"
+
+
 def save_table(
     df: DataFrame,
     name: str,
@@ -42,7 +48,7 @@ def save_table(
     """Managed analytical table sink (S5). Uses Delta when the runtime has it,
     else parquet. ``partition_by`` enables partition pruning for downstream
     scans — at 100 TB every published table should declare it."""
-    fmt = fmt or ("delta" if _delta_available(df) else "parquet")
+    fmt = fmt or table_format(df)
     writer = df.write.mode(mode).format(fmt)
     if merge_schema and fmt == "delta":
         writer = writer.option("mergeSchema", "true")

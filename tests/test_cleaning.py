@@ -5,6 +5,8 @@ studyGrScalaA.scala:11-125, contrGrScalaA.scala:13-54.)"""
 
 import datetime
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from azure_medicine_data_engineering_spark.functions import casting
@@ -92,3 +94,78 @@ def test_dedupe_duplicate_headers(spark):
     out = dedupe_columns(df)
     assert out.columns == ["a", "b", "a2", "b3"]
     assert out.collect()[0].a2 == 3
+
+
+def _wide_cohort(spark):
+    """A 118-column raw export shaped like the study cohort: renamed and
+    positional headers, comma decimals, dates, three flag encodings,
+    labels, junk and free-text columns."""
+    dec = [f"lab {i}" for i in range(30)]
+    dates = ["Data badania", "Data operacji", "Rok urodzenia"]
+    yesno = [f"objaw {i}" for i in range(5)]
+    prawda = [f"znak {i}" for i in range(20)]
+    bits = [f"lokalizacja {i}" for i in range(30)]
+    junk = [f"_c{i}" for i in range(4)]
+    head = ["ID pacjenta", "Płeć", "Rodzaj protezy"]
+    notes = [f"uwagi {i}" for i in range(118 - len(head + dec + dates + yesno + prawda + bits + junk))]
+    raw = head + dec + dates + yesno + prawda + bits + junk + notes
+    df = spark.createDataFrame([], ", ".join(f"`{c}` string" for c in raw))
+    spec = CleaningSpec(
+        renames={"ID pacjenta": "patient_id", "Data badania": "exam_date",
+                 "Data operacji": "surgery_date", "Rok urodzenia": "birth_date",
+                 **{d: d.replace(" ", "_") for d in dec[:8]}},
+        positional_renames={len(raw) - 1: "skala5Stopnie"},
+        drops=junk,
+        not_null_gate=["Płeć"],
+        casts=[
+            CastRule([d.replace(" ", "_") for d in dec[:8]] + dec[8:], "double", casting.comma_decimal),
+            CastRule(["exam_date", "surgery_date", "birth_date"], None, casting.to_date),
+            CastRule(yesno, None, casting.boolean_from_yes_no),
+            CastRule(prawda, None, casting.boolean_from_string),
+            CastRule(bits, "boolean"),
+        ],
+        label_maps={"Rodzaj protezy": {"StentGraft": "stentgraft", "Proteza": "proteza"}},
+    )
+    return df, spec
+
+
+def test_apply_round_trip_budget(spark):
+    """Building the spec's projection stays cheap on the driver: at most
+    20 py4j round trips per output column (Python call-site capture per
+    Column call, on by PySpark's default, costs ~43). Only this thread's
+    commands count: py4j releases collected Java objects from its own
+    thread at any time."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    df, spec = _wide_cohort(spark)
+    calls = 0
+    send = ClientServerConnection.send_command
+    me = threading.current_thread()
+
+    def counting(self, command):
+        nonlocal calls
+        calls += threading.current_thread() is me
+        return send(self, command)
+
+    gc.collect()
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        out = spec.apply(df)
+    finally:
+        ClientServerConnection.send_command = send
+        gc.enable()
+    assert len(out.columns) == 114
+    assert calls <= 20 * len(out.columns), calls
+
+
+def test_cast_of_missing_column_is_diagnosable(spark):
+    """A cast rule naming a column the frame lacks fails at apply time
+    with an analysis error that names the column."""
+    spec = CleaningSpec(casts=[CastRule(["suv_focus", "glukoza_typo"], "double")])
+    raw = spark.createDataFrame([("1,5", "2")], "suv_focus string, glukoza string")
+    with pytest.raises(AnalysisException, match="glukoza_typo"):
+        spec.apply(raw)

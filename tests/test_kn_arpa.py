@@ -99,3 +99,23 @@ def test_rescore_matches_in_memory_pruned_model(spark, docs, exported):
     for g in want:
         for col in ("n_docs", "n_5grams", "nll_pruned"):
             assert got[g][col] == want[g][col], (g, col)
+
+
+def test_write_section_rejects_non_integral_stats(spark, tmp_path):
+    """Stat slots are integers by contract: a double stat is refused on the
+    driver before any shard lands, and a NULL in an integral stat fails
+    the task instead of writing "nan"."""
+    from azure_medicine_data_engineering_spark.operators.arpa import _write_section
+
+    out = str(tmp_path)
+    doubled = spark.createDataFrame(
+        [("a", 1.0, 2, 3)], "w1 string, n1ep double, w2p long, l2p long"
+    )
+    with pytest.raises(TypeError, match="n1ep"):
+        _write_section(doubled, 1, out, 1)
+    nulled = spark.createDataFrame(
+        [("a", 1, 2, 3), ("b", None, 2, 3)], "w1 string, n1ep long, w2p long, l2p long"
+    )
+    with pytest.raises(Exception, match="non-finite|NaN|NA"):
+        _write_section(nulled, 1, out, 1).collect()
+    assert not glob.glob(f"{out}/*.txt")

@@ -87,6 +87,44 @@ def test_decision_tree_pipeline(spark):
     assert result.feature_importances["x"] > 0.9  # x dominates (M8)
 
 
+def test_decision_tree_cache_ownership(spark):
+    """The fit persists an uncached training frame only for its own
+    duration; a frame the caller cached keeps its cache through fit and
+    evaluate."""
+    from pyspark import StorageLevel
+
+    from azure_medicine_data_engineering_spark.ml.pipeline import (
+        evaluate,
+        hash_split,
+        train_decision_tree,
+    )
+
+    df = spark.range(300).select(
+        F.col("id").alias("k"),
+        F.col("id").cast("double").alias("x"),
+        (F.col("id") > 150).cast("double").alias("label"),
+    )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    train, test = hash_split(df, "k", 0.7)
+    model = train_decision_tree(train, ["x"], "label", max_depth=2)
+    evaluate(model, test, ["x"], "label")
+    assert cache_manager.isEmpty()
+
+    train.persist(StorageLevel.MEMORY_ONLY)
+    test.persist(StorageLevel.DISK_ONLY)
+    try:
+        model = train_decision_tree(train, ["x"], "label", max_depth=2)
+        assert train.storageLevel == StorageLevel.MEMORY_ONLY
+        evaluate(model, test, ["x"], "label")
+        assert train.storageLevel == StorageLevel.MEMORY_ONLY
+        assert test.storageLevel == StorageLevel.DISK_ONLY
+    finally:
+        train.unpersist()
+        test.unpersist()
+    assert cache_manager.isEmpty()
+
+
 def test_quality_lr_planted_separable(spark):
     """Planted linearly separable corpus: positive docs speak only
     'good'-vocab tokens, negatives only 'bad'-vocab tokens — the hashed

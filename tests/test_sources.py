@@ -49,6 +49,26 @@ def test_catalog_registration(spark, tmp_path):
     create_table_with_meta(df, "t_cat_test", "demo table v2", catalog_table="meta_test")
     rows = {r.tableName: r.tableDescription for r in read_meta(spark, "meta_test").collect()}
     assert rows["t_cat_test"] == "demo table v2"
+    # any description round-trips byte-exact, and each registration adds
+    # exactly one data file to the catalog table
+    location = {
+        r.col_name: r.data_type
+        for r in spark.sql("DESCRIBE TABLE EXTENDED meta_test").collect()
+    }["Location"]
+    meta_dir = location.removeprefix("file:")
+
+    def data_files():
+        return {f for f in os.listdir(meta_dir) if not f.startswith((".", "_"))}
+
+    before = data_files()
+    tricky = "it's a 'quoted'; DROP TABLE meta_test; -- \\ \"x\" ;"
+    create_table_with_meta(df, "t_cat_test", tricky, catalog_table="meta_test")
+    after = data_files()
+    assert len(after - before) == 1 and before <= after
+    create_table_with_meta(df, "t_cat_test2", "third; 'one'", catalog_table="meta_test")
+    assert len(data_files() - after) == 1
+    rows = {r.tableName: r.tableDescription for r in read_meta(spark, "meta_test").collect()}
+    assert rows == {"t_cat_test": tricky, "t_cat_test2": "third; 'one'"}
     for t in ("t_cat_test", "t_cat_test2", "meta_test"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
