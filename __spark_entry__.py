@@ -219,35 +219,6 @@ def _touched_queries() -> tuple[set[str], set[str]]:
     return precise, broad
 
 
-# Optimization round 16 (r15 VERDICT #1): the round-15/16 rewritten
-# families were never driver-re-gated — their operator rewrites (KN
-# suffix-cascade persists + count-grain scoring, BPE literal-rewrite
-# trainers, WDS egress packing, ARPA export vectorization, robots REP
-# vectorization, SemDeDup salt) are semantically delicate, and in round 15
-# the 50 gate slots all went to never-gated build queries. These names get
-# an explicit front-of-gate slot this round so CORRECTNESS_r16.json
-# records the driver's own hash check on the rewritten code.
-_FORCE_REGATE = {
-    # KN/mKN n-gram family (r15 count-grain rewrite + r16 cascade persists)
-    "kn_5gram_pruned_delta", "mkn_5gram_quantized_delta",
-    "kn_5gram_perplexity_by_source", "mkn_5gram_perplexity_by_source",
-    "kn_trigram_perplexity_by_source", "ccnet_router_model_delta",
-    "kn_arpa_roundtrip",
-    # BPE trainer family (r15 driver-argmax + lazy literal rewrite)
-    "bpe_vocab_merges", "byte_bpe_gpt2_merges", "tokenizer_family_report",
-    "gpt2_tokenizer_roundtrip",
-    # WDS landed-bytes family (r15 small-file packing)
-    "wds_curated_shards", "wds_curated_shard_egress",
-    # word_ngrams bind-once consumers named by the verdict
-    "ngram_frequency_topk", "duplicate_window_spans",
-    # r16-touched operators (robots REP vectorization, SemDeDup salt)
-    "image_semantic_dedup_flags", "frontier_host_budget",
-    "crawl_budgeted_funnel", "frontier_recrawl_schedule",
-    "crawl_e2e_frontier_docs", "streaming_frontier_budget",
-    "robots_allow_gate",
-}
-
-
 def _gate_order(names) -> list[str]:
     verified = _driver_verified()
     precise, broad = _touched_queries()
@@ -255,7 +226,7 @@ def _gate_order(names) -> list[str]:
     def tier(n: str) -> int:
         if n not in verified:
             return 0
-        if n in _FORCE_REGATE or n in precise:
+        if n in precise:
             return 1
         if n in broad:
             return 2

@@ -1,26 +1,33 @@
-
-
-def test_gate_order_prioritizes_touched_queries():
+def test_gate_order_prioritizes_touched_queries(monkeypatch):
     """Round-10 driver-rotation hygiene: a verified query whose fn source
     or oracle changed since .gate_snapshot.json must sort before
     verified-untouched queries (and after never-verified ones), so the
-    driver's 50-slot gate re-hashes this round's edits."""
+    driver's 50-slot gate re-hashes this round's edits. Every verified
+    query that is neither precisely nor closure-touched sorts after every
+    touched one and keeps registration order, so no hard-coded
+    front-of-gate set can take slots from the touched queries. Checked on
+    the repo's own snapshot and on a fixed one where only the last two
+    registered queries are touched, which every other name must follow."""
     import __spark_entry__ as m
 
     precise, broad = m._touched_queries()
-    order = m._gate_order(list(m.registry.QUERIES))
     verified = m._driver_verified()
-    pos = {n: i for i, n in enumerate(order)}
+    registered = list(m.registry.QUERIES)
+    order = m._gate_order(registered)
     unverified = [n for n in order if n not in verified]
-    rest = [
-        n for n in order
-        if n in verified and n not in precise and n not in broad
+    rest = [n for n in registered if n in verified and n not in precise | broad]
+    # never-verified first, verified-untouched last in registration order,
+    # the touched ones in between
+    assert order[:len(unverified)] == unverified
+    assert order[len(order) - len(rest):] == rest
+
+    monkeypatch.setattr(m, "_driver_verified", lambda: set(registered))
+    monkeypatch.setattr(
+        m, "_touched_queries", lambda: ({registered[-1]}, {registered[-2]})
+    )
+    assert m._gate_order(registered) == [
+        registered[-1], registered[-2], *registered[:-2]
     ]
-    for p in precise:
-        if p in verified and rest:
-            assert pos[p] < min(pos[r] for r in rest), p
-        for u in unverified:
-            assert pos[u] < pos[p] or p not in verified
 
 
 def test_gate_snapshot_roundtrip(tmp_path):

@@ -48,7 +48,6 @@ def main() -> None:
             "spark.sql.shuffle.partitions": CPUS,
             "spark.ui.enabled": "false",
             "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "1m",
         },
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()

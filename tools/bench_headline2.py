@@ -36,7 +36,6 @@ def main() -> None:
             "spark.ui.enabled": "false",
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
             "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "1m",
         },
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warm-up

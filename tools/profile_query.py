@@ -1,6 +1,9 @@
 """Per-query optimization profiler (round 15): for each named query, dump
 `.explain("formatted")` to plans/r16/<name>_<tag>.txt and time the noop-sink
-execution (guide §1.1/§1.4), with the job labelled (§1.5).
+execution (guide §1.1/§1.4), with the job labelled (§1.5). Per run it also
+records how many classes Spark's codegen compiled (`codegen_compiles`) and
+the Janino compile time they took (`codegen_ms`), so a codegen-cache thrash
+shows up as compiles on the repeat runs rather than as unexplained wall time.
 
 Usage: python tools/profile_query.py [--tag before|after] [--repeat N] q [q...]
 """
@@ -45,7 +48,6 @@ def main() -> None:
             "spark.sql.shuffle.partitions": CPUS,
             "spark.ui.enabled": "false",
             "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.sql.files.openCostInBytes": "1m",
         },
     )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -54,19 +56,32 @@ def main() -> None:
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", "r16")
 
+    jvm = spark._jvm
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
     results = {}
+    codegen_compiles = {}
+    codegen_ms = {}
     for name in names:
         fn = qs.get(name)
         if fn is None:
             print(f"SKIP unknown {name}")
             continue
-        runs = []
+        runs, n_compiles, compile_ms = [], [], []
         for i in range(repeat):
             spark.sparkContext.setJobDescription(f"{name} [{tag} run{i}]")
+            c0, ns0 = compiles.getCount(), generator.compileTime()
             t0 = time.time()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 3))
+            n_compiles.append(compiles.getCount() - c0)
+            compile_ms.append(
+                round((generator.compileTime() - ns0) / 1e6, 1)
+            )
             if i == 0:
                 buf = io.StringIO()
                 with redirect_stdout(buf):
@@ -77,8 +92,13 @@ def main() -> None:
                 c.unpersist()
             spark.sparkContext.setJobDescription(None)
         results[name] = runs
-        print(f"{name}: {runs}")
-    print(json.dumps({"tag": tag, "sf_dir": SF_DIR, "times": results}))
+        codegen_compiles[name] = n_compiles
+        codegen_ms[name] = compile_ms
+        print(f"{name}: {runs} compiles={n_compiles} codegen_ms={compile_ms}")
+    print(json.dumps({
+        "tag": tag, "sf_dir": SF_DIR, "times": results,
+        "codegen_compiles": codegen_compiles, "codegen_ms": codegen_ms,
+    }))
 
 
 if __name__ == "__main__":
